@@ -27,6 +27,8 @@ from smos_spark.schema import TIERS
 
 __all__ = [
     "rollup_from_raw",
+    "row_partials",
+    "merge_partials",
     "reaggregate",
     "with_derived",
     "salted_rollup_from_raw",
@@ -41,49 +43,56 @@ def _bucket(col: Column, tier: str) -> Column:
     return F.date_trunc(TIERS[tier]["unit"], col)
 
 
-def _partial_aggs() -> list[Column]:
-    """Partial aggregates over raw turns. All algebraic → exact reagg."""
-    length = F.length("text")
-    return [
-        F.count(F.lit(1)).alias("n_turns"),
-        F.count(F.when(F.col("role") == "user", 1)).alias("n_role_user"),
-        F.count(F.when(F.col("role") == "assistant", 1)).alias("n_role_assistant"),
-        F.count(F.when(F.col("role") == "tool", 1)).alias("n_role_tool"),
-        F.count(F.when(F.col("role") == "system", 1)).alias("n_role_system"),
-        F.count(F.col("tool")).alias("n_tool_calls"),
-        F.sum(length).alias("len_sum"),
-        F.count(length).alias("len_cnt"),
-        F.min(length).cast("long").alias("len_min"),
-        F.max(length).cast("long").alias("len_max"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    ]
-
-
-_MERGE = {
-    "n_turns": "sum",
-    "n_role_user": "sum",
-    "n_role_assistant": "sum",
-    "n_role_tool": "sum",
-    "n_role_system": "sum",
-    "n_tool_calls": "sum",
-    "len_sum": "sum",
-    "len_cnt": "sum",
-    "len_min": "min",
-    "len_max": "max",
-    "first_ts": "min",
-    "last_ts": "max",
+# THE definition of the 12 tier partial columns over raw turns:
+# name -> (kind, per-turn SQL expression). A "count" column counts the
+# turns where the expression is non-NULL. All algebraic -> exact reagg;
+# `_partial_aggs`, `_row_partials` and `_merge_aggs` derive from this
+# one table. SQL text, not Column calls: each Column call is a py4j
+# round trip, and every tier build and merge rebuilds these lists.
+_PARTIALS: dict[str, tuple[str, str]] = {
+    "n_turns": ("count", "1"),
+    "n_role_user": ("count", "CASE WHEN role = 'user' THEN 1 END"),
+    "n_role_assistant": ("count", "CASE WHEN role = 'assistant' THEN 1 END"),
+    "n_role_tool": ("count", "CASE WHEN role = 'tool' THEN 1 END"),
+    "n_role_system": ("count", "CASE WHEN role = 'system' THEN 1 END"),
+    "n_tool_calls": ("count", "tool"),
+    "len_sum": ("sum", "length(text)"),
+    "len_cnt": ("count", "length(text)"),
+    "len_min": ("min", "length(text)"),
+    "len_max": ("max", "length(text)"),
+    "first_ts": ("min", "ts"),
+    "last_ts": ("max", "ts"),
 }
 
 
+def _long_unless_ts(name: str, sql: str) -> Column:
+    typed = sql if name.endswith("_ts") else f"CAST({sql} AS BIGINT)"
+    return F.expr(f"{typed} AS {name}")
+
+
+def _partial_aggs() -> list[Column]:
+    """Partial aggregates over raw turns."""
+    return [
+        _long_unless_ts(name, f"{kind}({e})") for name, (kind, e) in _PARTIALS.items()
+    ]
+
+
+def _row_partials() -> list[Column]:
+    """One raw turn as a one-row partial: the partial columns of a
+    bucket holding only that turn. Merging one-row partials with
+    `_merge_aggs` equals `_partial_aggs` over the same turns."""
+    return [
+        _long_unless_ts(name, f"({e}) IS NOT NULL" if kind == "count" else e)
+        for name, (kind, e) in _PARTIALS.items()
+    ]
+
+
 def _merge_aggs() -> list[Column]:
-    out = []
-    for name, how in _MERGE.items():
-        agg = getattr(F, how)(F.col(name))
-        if how == "sum":
-            agg = agg.cast("long")
-        out.append(agg.alias(name))
-    return out
+    """Merge partial rows: counts and sums add, min/max stay min/max."""
+    return [
+        _long_unless_ts(name, f"{'sum' if kind == 'count' else kind}({name})")
+        for name, (kind, _) in _PARTIALS.items()
+    ]
 
 
 def rollup_from_raw(df: DataFrame, tier: str) -> DataFrame:
@@ -95,6 +104,22 @@ def rollup_from_raw(df: DataFrame, tier: str) -> DataFrame:
     return df.groupBy(
         F.col("conv_id"), _bucket(F.col("ts"), tier).alias("bucket_start")
     ).agg(*_partial_aggs())
+
+
+def row_partials(df: DataFrame, tier: str) -> DataFrame:
+    """raw turns -> one-row tier partials at `tier`, unaggregated: one
+    row per turn, keyed (conv_id, bucket_start). `merge_partials`
+    of these equals `rollup_from_raw` — the shape an incremental
+    merge unions with stored tier rows before its one aggregate."""
+    return df.select(
+        "conv_id", _bucket(F.col("ts"), tier).alias("bucket_start"), *_row_partials()
+    )
+
+
+def merge_partials(parts: DataFrame, *keys: str) -> DataFrame:
+    """Exact merge of partial rows sharing (*keys, conv_id,
+    bucket_start) — tier rows, one-row partials, or both."""
+    return parts.groupBy(*keys, "conv_id", "bucket_start").agg(*_merge_aggs())
 
 
 def reaggregate(tier_df: DataFrame, to_tier: str) -> DataFrame:

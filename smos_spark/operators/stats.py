@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from smos_spark.functions.joins import null_safe_join
+
 __all__ = [
     "autocorrelation",
     "concentration",
@@ -604,7 +606,9 @@ def standardize(
             F.sum(v.cast(_DEC) * v.cast(_DEC)).alias("_zq"),
         )
     )
-    joined = df.join(F.broadcast(moments), group_cols, "left")
+    # null-safe: a NULL group key is a group, so its rows must meet its
+    # own moments (plain equality never matches NULL to NULL)
+    joined = null_safe_join(df, F.broadcast(moments), group_cols, "left")
     num = F.col("_zn").cast(_DEC) * v.cast(_DEC) - F.col("_zs")
     rad = (
         F.col("_zn").cast(_DEC) * F.col("_zq")

@@ -100,4 +100,11 @@ def read_block_series(
     from smos_spark.operators.compress import decompress_series
 
     blocks = spark.read.parquet(blocks_path).where(F.col("conv_id") == conv_id)
-    return decompress_series(blocks, list(value_cols), ts_col=ts_col).orderBy(ts_col)
+    # one conversation's series is small: one partition sorted in
+    # place. A global orderBy would run the Python decode twice, once
+    # to sample range bounds and once to shuffle.
+    return (
+        decompress_series(blocks, list(value_cols), ts_col=ts_col)
+        .coalesce(1)
+        .sortWithinPartitions(ts_col)
+    )

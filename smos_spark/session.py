@@ -48,6 +48,15 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SMOS_SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-code cache: one tier store cycle (bulk build, point
+        # reads, an append) needs more distinct generated classes than
+        # the default 100 entries hold, so each cycle recompiled ~85 of
+        # them with Janino and the JVM JIT-compiled each new class again
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # no Python call-site capture per DataFrame/Column call: it
+        # costs several extra py4j round trips per call, and a store
+        # cycle builds hundreds of Column expressions
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -7,7 +7,11 @@ and the substitution is documented in BENCH/BASELINE.md):
 
     root/
       transcripts/ts_date=YYYY-MM-DD/...   raw turns, days(ts) pruning
-      tiers/{1m,1h,1d}/bucket_id=K/...     tier partials, key-bucketed
+      tiers/{1m,1h,1d}/                    tier partials:
+        bucket_date=YYYY-MM-DD/bucket_id=K/...   time-major, key-bucketed
+        _schema.json                       data schema recorded at write
+      _staging/<run_id>-<batch_id>/        one tier merge's staged write,
+        tier=…/bucket_date=…/bucket_id=…/  renamed into tiers/ to commit
       _checkpoint/                         per-batch lineage+metrics rows
       overview.json                        last_day / parameters state
 
@@ -26,12 +30,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import warnings
 from dataclasses import dataclass
+from datetime import timezone
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from smos_spark.schema import TIERS
 
@@ -45,11 +54,22 @@ DEFAULT_BLOOM_NDV = 1 << 16
 class ConcurrentWriterError(RuntimeError):
     """A second writer attempted tier maintenance on a locked store."""
 
-CHECKPOINT_SCHEMA = (
-    "run_id string, batch_id long, tier string, partition_key string, "
-    "rows_in long, rows_out long, min_ts timestamp, max_ts timestamp, "
-    "committed_seq long"
+CHECKPOINT_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("batch_id", T.LongType()),
+        T.StructField("tier", T.StringType()),
+        T.StructField("partition_key", T.StringType()),
+        T.StructField("rows_in", T.LongType()),
+        T.StructField("rows_out", T.LongType()),
+        T.StructField("min_ts", T.TimestampType()),
+        T.StructField("max_ts", T.TimestampType()),
+        T.StructField("committed_seq", T.LongType()),
+    ]
 )
+
+#: physical partition columns of every tier, time-major first
+TIER_PARTITION_COLS = ("bucket_date", "bucket_id")
 
 
 def bucket_expr(col: str = "conv_id", n_buckets: int = DEFAULT_N_BUCKETS):
@@ -182,50 +202,107 @@ class TranscriptStore:
             "bucket_id", bucket_expr("conv_id", self.n_buckets)
         )
 
-    def write_tier(self, tier_df: DataFrame, tier: str, mode: str = "overwrite") -> None:
-        # Hash-repartition on the partition columns (one shuffle, no
-        # sampling pass — repartitionByRange would re-execute the whole
-        # upstream aggregate to sample range boundaries). The sort
-        # leads with the partition columns so the dynamic-partition
-        # writer's required ordering is already satisfied: no hidden
-        # second sort, one open file at a time, conv-clustered rows.
+    def layout(self, tier_df: DataFrame, *lead: str) -> DataFrame:
+        """Add the partition columns and hash-repartition on
+        (*lead, bucket_date, bucket_id) — one shuffle, no sampling pass
+        (repartitionByRange would re-execute the whole upstream
+        aggregate to sample range boundaries), so each partition
+        directory is one task's rows and one file. The partition count
+        is fixed at defaultParallelism: left to AQE, the 1 MB
+        coalescing floor packs a small tier's writes into one task."""
+        n = tier_df.sparkSession.sparkContext.defaultParallelism
+        return self._with_partition_cols(tier_df).repartition(
+            n, *lead, *TIER_PARTITION_COLS
+        )
+
+    def _write_partitioned(self, df: DataFrame, path: str, *lead: str) -> None:
+        """The tier writer. The sort leads with the partition columns
+        so the dynamic-partition writer's required ordering is already
+        satisfied: no hidden second sort, one open file at a time,
+        conv-clustered rows."""
+        cols = (*lead, *TIER_PARTITION_COLS)
         self._with_point_read_options(
-            self._with_partition_cols(tier_df)
-            .repartition("bucket_date", "bucket_id")
-            .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
-            .write.partitionBy("bucket_date", "bucket_id")
-            .mode(mode)
-        ).parquet(self.tier_path(tier))
+            df.sortWithinPartitions(*cols, "conv_id", "bucket_start")
+            .write.partitionBy(*cols)
+            .mode("overwrite")
+        ).parquet(path)
+
+    @staticmethod
+    def _data_schema(df: DataFrame, *lead: str) -> str:
+        """`df`'s schema minus the partition columns, as JSON."""
+        drop = {*lead, *TIER_PARTITION_COLS}
+        return T.StructType([f for f in df.schema if f.name not in drop]).json()
+
+    def _record_tier_schema(self, tier: str, schema_json: str) -> None:
+        p = Path(self.tier_path(tier))
+        p.mkdir(parents=True, exist_ok=True)
+        tmp = p / "_schema.json.tmp"
+        tmp.write_text(schema_json)
+        os.replace(tmp, p / "_schema.json")
+
+    def write_tier(self, tier_df: DataFrame, tier: str) -> None:
+        self._write_partitioned(self.layout(tier_df), self.tier_path(tier))
+        self._record_tier_schema(tier, self._data_schema(tier_df))
         self._ensure_overview()
 
-    def overwrite_tier_partitions(self, tier_df: DataFrame, tier: str) -> None:
-        """Dynamic partition overwrite — rewrites only the
-        (bucket_date, bucket_id) partitions present in tier_df
-        (the Iceberg-MERGE substitute)."""
-        spark = tier_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            self._with_point_read_options(
-                self._with_partition_cols(tier_df)
-                .repartition("bucket_date", "bucket_id")
-                .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
-                .write.partitionBy("bucket_date", "bucket_id")
-                .mode("overwrite")
-            ).parquet(self.tier_path(tier))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # --- staged tier merges ---
+    # A merge writes every tier partition it rewrites ONCE, under
+    # _staging/<name>/tier=…/bucket_date=…/bucket_id=…, then renames
+    # each directory over its live counterpart. A crash before the
+    # renames leaves every tier as it was; the next writer clears
+    # the leftover with clear_staging().
+    @property
+    def staging_root(self) -> Path:
+        return self.root / "_staging"
+
+    def clear_staging(self) -> None:
+        shutil.rmtree(self.staging_root, ignore_errors=True)
+
+    def write_staged(self, df: DataFrame, name: str) -> None:
+        """Write tier rows carrying a `tier` column and the partition
+        columns (as `layout(..., "tier")` lays them out) under
+        _staging/<name>/, with their data schema beside them."""
+        out = self.staging_root / name
+        self._write_partitioned(df, str(out), "tier")
+        (out / "_schema.json").write_text(self._data_schema(df, "tier"))
+
+    def swap_staged(self, name: str) -> None:
+        """Commit a staged write: rename each staged (tier,
+        bucket_date, bucket_id) directory into tiers/<tier>/ in place
+        of the live one, then drop the staging directory. Tier
+        partitions the write did not touch are left alone."""
+        src = self.staging_root / name
+        schema_json = (src / "_schema.json").read_text()
+        for tier_dir in sorted(src.glob("tier=*")):
+            tier = tier_dir.name.split("=", 1)[1]
+            self._record_tier_schema(tier, schema_json)
+            for part in sorted(tier_dir.glob("bucket_date=*/bucket_id=*")):
+                dest = Path(self.tier_path(tier)) / part.parent.name / part.name
+                dest.parent.mkdir(exist_ok=True)
+                if dest.exists():
+                    os.rename(dest, part.with_name(part.name + ".replaced"))
+                os.rename(part, dest)
+        self.clear_staging()
+
+    def scan_tier(self, spark: SparkSession, tier: str) -> DataFrame:
+        """The tier's rows plus its partition columns, read with the
+        schema recorded when the tier was written: no schema-inference
+        job per read, and a column-subset export reads back as
+        written."""
+        p = Path(self.tier_path(tier))
+        schema = T.StructType.fromJson(json.loads((p / "_schema.json").read_text()))
+        return spark.read.schema(schema).parquet(str(p))
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
-        return spark.read.parquet(self.tier_path(tier)).drop("bucket_id", "bucket_date")
+        return self.scan_tier(spark, tier).drop(*TIER_PARTITION_COLS)
 
     def read_tier_since(self, spark: SparkSession, tier: str, day_lo) -> DataFrame:
         """Tier rows with bucket_date >= day_lo — the filter hits the
         bucket_date PARTITION column, so older directories are pruned
         from the scan entirely."""
-        df = spark.read.parquet(self.tier_path(tier))
+        df = self.scan_tier(spark, tier)
         return df.where(F.col("bucket_date") >= F.to_date(F.lit(str(day_lo)))).drop(
-            "bucket_id", "bucket_date"
+            *TIER_PARTITION_COLS
         )
 
     def _bucket_literal(self, spark: SparkSession, conv_id: str) -> int:
@@ -250,7 +327,7 @@ class TranscriptStore:
         bucket_id restricts the scan to one directory — the read-one-
         cell-file locality of the reference (J2)."""
         b = self._bucket_literal(spark, conv_id)
-        df = spark.read.parquet(self.tier_path(tier))
+        df = self.scan_tier(spark, tier)
         return df.where(
             (F.col("bucket_id") == F.lit(b)) & (F.col("conv_id") == conv_id)
         ).drop("bucket_id")
@@ -420,7 +497,7 @@ class TranscriptStore:
         opens. Filters land on the scan (bucket_date partition pruning
         for the ts range; conv_id min/max row-group stats for the key
         range); one write, no driver materialization."""
-        df = spark.read.parquet(self.tier_path(tier))
+        df = self.scan_tier(spark, tier)
         if ts_lo is not None:
             df = df.where(F.col("bucket_start") >= F.lit(str(ts_lo)).cast("timestamp"))
             df = df.where(F.col("bucket_date") >= F.to_date(F.lit(str(ts_lo)[:10])))
@@ -544,29 +621,29 @@ class TranscriptStore:
         if not rows:
             return
         self._recover_checkpoint_swap()
-        spark.createDataFrame(
+        # built as an Arrow table: the JVM decodes it, no Python worker
+        # starts. Naive datetimes are local time, as collect() returns
+        # them; astimezone() pins them to their UTC instant.
+        table = pa.Table.from_pylist(
             [
-                (
-                    r["run_id"],
-                    r["batch_id"],
-                    r["tier"],
-                    r["partition_key"],
-                    r["rows_in"],
-                    r["rows_out"],
-                    r["min_ts"],
-                    r["max_ts"],
-                    r["committed_seq"],
-                )
+                {
+                    **r,
+                    "min_ts": r["min_ts"] and r["min_ts"].astimezone(timezone.utc),
+                    "max_ts": r["max_ts"] and r["max_ts"].astimezone(timezone.utc),
+                }
                 for r in rows
             ],
-            CHECKPOINT_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(self.checkpoint_path)
+            schema=to_arrow_schema(CHECKPOINT_SCHEMA),
+        )
+        spark.createDataFrame(table, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(self.checkpoint_path)
 
     def read_checkpoint(self, spark: SparkSession) -> DataFrame | None:
         self._recover_checkpoint_swap()
         if not Path(self.checkpoint_path).exists():
             return None
-        return spark.read.parquet(self.checkpoint_path)
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.checkpoint_path)
 
     def compact_checkpoint(self, spark: SparkSession, max_files: int = 16) -> int:
         """Compact the lineage table's per-batch coalesce(1) appends.
@@ -620,7 +697,7 @@ class TranscriptStore:
         derived from a broadcast date→n_files map, so big days still
         get multiple parallel writers/files. Untouched dates keep
         their files byte-identical; readers see old-or-new per
-        partition (same contract as overwrite_tier_partitions).
+        partition.
         Callers doing concurrent maintenance hold the advisory writer
         lock, like tier merges. Returns
         ``{"dates": k, "files_before": a, "files_after": b}``."""

@@ -10,22 +10,33 @@ Reference semantics (/root/reference/src/smos/smos_l2/reshuffle.py:96-155):
 Our engine upgrades that to per-batch lineage rows and idempotent
 resume: a batch already present in the checkpoint table is skipped, so
 re-running an interrupted job converges to the identical store (tested
-byte-for-byte at the tier level in tests/test_incremental.py).
+at the tier level in tests/test_store_incremental.py).
 
-Merge strategy on parquet (no Iceberg MERGE in sandbox): tier buckets
-straddling the batch boundary are re-aggregated from (existing tier ∪
-new partials) and rewritten via dynamic partition overwrite — the
-write-then-commit-manifest pattern; the overview commit is the atomic
-rename at the end.
+Merge strategy on parquet (no Iceberg MERGE in sandbox): one Spark plan
+maintains all three tiers. The batch's turns become one-row 1m/1h/1d
+partials, unioned under a `tier` column with each tier's rows from the
+batch's first day on (buckets never span days, so earlier days are
+final). One hash exchange on (tier, bucket_date, bucket_id) feeds both
+the merge aggregate and the writer, which writes every rewritten
+partition once under ``_staging/<run_id>-<batch_id>/``. Each staged
+directory is then renamed over its live counterpart, and the lineage
+rows and the overview commit last. A crash before the renames leaves
+every tier as it was; the next writer clears the leftover staging.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime as dt
+import shutil
+from functools import reduce
+from pathlib import Path
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from smos_spark.operators.rollup import reaggregate, rollup_from_raw
-from smos_spark.sources.store import Overview, TranscriptStore
+from smos_spark.operators.rollup import merge_partials, row_partials
+from smos_spark.schema import TIERS
+from smos_spark.sources.store import TIER_PARTITION_COLS, TranscriptStore
 
 
 class MonotonicAppendError(ValueError):
@@ -77,6 +88,7 @@ def _ingest_batch_locked(
     quarantine: bool,
 ) -> dict:
     spark = batch.sparkSession
+    store.clear_staging()  # a crashed writer's unswapped merge
     ov = store.load_overview()
 
     # --- resume / idempotence: skip an already-committed batch ---
@@ -133,69 +145,29 @@ def _ingest_batch_locked(
     batch = batch.cache()
     store.append_transcripts(batch)
 
-    # --- tier maintenance: re-aggregate only affected buckets ---
-    stats: list[dict] = []
-    new_1m = rollup_from_raw(batch, "1m")
-    affected = {"1m": new_1m}
-    affected["1h"] = reaggregate(new_1m, "1h")
-    affected["1d"] = reaggregate(affected["1h"], "1d")
-
-    import datetime as _dt
-    import shutil as _shutil
-    from pathlib import Path
-
-    from pyspark.sql import Observation
-
     # every bucket the batch touches starts on/after lo's calendar day
     # (bucket_start = date_trunc(unit, ts ≥ lo)), so the day-aligned
-    # rewrite boundary is known WITHOUT a per-tier min() job
+    # rewrite boundary is known WITHOUT a per-tier min() job; the
+    # bucket_date filter prunes everything before it from the scan
     batch_day = str(lo)[:10]
+    overlap = {
+        t: store.read_tier_since(spark, t, batch_day)
+        for t in TIERS
+        if Path(store.tier_path(t)).exists()
+    }
+    rows_out = _rewrite_tiers(store, batch, overlap, f"{run_id}-{batch_id}")
+
     # the batch's calendar-day span, enumerated driver-side (no job):
     # any derived compressed blocks for these days encode PRE-append
     # tier values and must be dropped (same tier/blocks consistency
     # rule as retention and merge_quarantine). Dropping an untouched
     # day in the span is safe — it just re-encodes later.
-    d0 = _dt.date.fromisoformat(batch_day)
-    d1 = _dt.date.fromisoformat(str(hi)[:10])
-    batch_days = [
-        str(d0 + _dt.timedelta(days=i)) for i in range((d1 - d0).days + 1)
-    ]
-    for tier in ("1m", "1h", "1d"):
-        new_partials = affected[tier]
-        tier_exists = Path(store.tier_path(tier)).exists()
-        # rows_out via an observed metric on the write itself — no
-        # post-write count job, no full-table scan
-        obs = Observation(f"tier_{tier}_b{batch_id}")
-        if not tier_exists:
-            out = new_partials.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-            store.write_tier(out, tier, mode="overwrite")
-        else:
-            # only date partitions the batch touches need rewriting;
-            # the boundary is day-aligned because the physical layout
-            # partitions on bucket_date — everything before it is final
-            # and is neither read (partition pruning) nor written.
-            overlap = store.read_tier_since(spark, tier, batch_day)
-            merged = reaggregate(overlap.unionByName(new_partials), tier)
-            out = merged.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-            store.overwrite_tier_partitions(out, tier)
-        for d in batch_days:
-            bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
-            if bdir.exists():
-                _shutil.rmtree(bdir)
-                stats.append(
-                    {
-                        "run_id": run_id,
-                        "batch_id": batch_id,
-                        "tier": f"blocks_{tier}",
-                        "partition_key": f"block_date={d}",
-                        "rows_in": 0,
-                        "rows_out": 0,
-                        "min_ts": None,
-                        "max_ts": None,
-                        "committed_seq": -1,
-                    }
-                )
-        out_rows = obs.get["rows_out"]
+    d0 = dt.date.fromisoformat(batch_day)
+    d1 = dt.date.fromisoformat(str(hi)[:10])
+    batch_days = [str(d0 + dt.timedelta(days=i)) for i in range((d1 - d0).days + 1)]
+    stats: list[dict] = []
+    for seq, tier in enumerate(TIERS):
+        stats += _drop_stale_blocks(store, tier, batch_days, run_id, batch_id)
         stats.append(
             {
                 "run_id": run_id,
@@ -203,10 +175,10 @@ def _ingest_batch_locked(
                 "tier": tier,
                 "partition_key": "all",
                 "rows_in": n_in,
-                "rows_out": out_rows,
+                "rows_out": rows_out[tier],
                 "min_ts": lo,
                 "max_ts": hi,
-                "committed_seq": batch_id * 10 + {"1m": 0, "1h": 1, "1d": 2}[tier],
+                "committed_seq": batch_id * 10 + seq,
             }
         )
 
@@ -217,6 +189,56 @@ def _ingest_batch_locked(
     store.save_overview(ov)
     batch.unpersist()
     return {"skipped": False, "batch_id": batch_id, "rows_in": n_in}
+
+
+def _rewrite_tiers(
+    store: TranscriptStore,
+    raw: DataFrame,
+    overlap: dict[str, DataFrame],
+    name: str,
+) -> dict[str, int]:
+    """Merge `raw` turns into every tier with one staged write, then
+    swap it in. `overlap` holds, per existing tier, the stored rows of
+    every partition the merge rewrites. Returns rows written per tier,
+    observed on the write itself (no count job)."""
+    parts = [row_partials(raw, t).select(F.lit(t).alias("tier"), "*") for t in TIERS]
+    parts += [df.select(F.lit(t).alias("tier"), "*") for t, df in overlap.items()]
+    merged = merge_partials(
+        store.layout(reduce(DataFrame.unionByName, parts), "tier"),
+        "tier",
+        *TIER_PARTITION_COLS,
+    )
+    obs = Observation(f"tiers_{name}")
+    counts = [F.count(F.when(F.col("tier") == t, 1)).alias(t) for t in TIERS]
+    store.write_staged(merged.observe(obs, *counts), name)
+    store.swap_staged(name)
+    return obs.get
+
+
+def _drop_stale_blocks(
+    store: TranscriptStore, tier: str, days: list[str], run_id: str, batch_id: int
+) -> list[dict]:
+    """Drop the tier's compressed blocks for `days`: they encode tier
+    values from before a rewrite. Returns one lineage row per drop."""
+    rows = []
+    for d in days:
+        bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
+        if bdir.exists():
+            shutil.rmtree(bdir)
+            rows.append(
+                {
+                    "run_id": run_id,
+                    "batch_id": batch_id,
+                    "tier": f"blocks_{tier}",
+                    "partition_key": f"block_date={d}",
+                    "rows_in": 0,
+                    "rows_out": 0,
+                    "min_ts": None,
+                    "max_ts": None,
+                    "committed_seq": -1,
+                }
+            )
+    return rows
 
 
 def ingest_batches(
@@ -256,7 +278,8 @@ def merge_quarantine(
       re-running after any crash converges to the same bytes;
     * tiers are recomputed for the affected bucket_dates from the
       MERGED raw days (1m/1h/1d buckets never span a day, so a day
-      recompute is self-contained) — also a dynamic overwrite;
+      recompute is self-contained) — the same staged write and rename
+      swap as ingest_batch;
     * derived compressed block stores (``blocks_<tier>/block_date=d``)
       are computed FROM tier rows, so a merged day makes its blocks
       stale: they are DROPPED for every affected day (same tier/blocks
@@ -279,14 +302,12 @@ def merge_quarantine(
     Scale shape: late data clusters near the append boundary, so the
     rewrite set is a handful of day partitions regardless of table
     size; everything else is partition-pruned out of both the read
-    and the write. One shuffle per tier recompute, same plans as the
-    original ingest.
+    and the write. One shuffle recomputes all three tiers, the same
+    plan as the original ingest.
     """
-    import shutil
-    from pathlib import Path
-
     store.acquire_writer_lock()
     try:
+        store.clear_staging()  # a crashed writer's unswapped merge
         qdir = Path(store.root) / "_quarantine"
         frozen = Path(store.root) / "_quarantine_merging"
         if not frozen.exists():
@@ -360,34 +381,15 @@ def merge_quarantine(
             .where(F.col("ts_date").isin(days))
             .drop("ts_date")
         )
-        tiers = {"1m": rollup_from_raw(raw_days, "1m")}
-        tiers["1h"] = reaggregate(tiers["1m"], "1h")
-        tiers["1d"] = reaggregate(tiers["1h"], "1d")
-        stats = []
         ov = store.load_overview()
         merge_batch = ov.last_batch_id + 1
-        for tier, out in tiers.items():
-            store.overwrite_tier_partitions(out, tier)
+        rows_out = _rewrite_tiers(store, raw_days, {}, f"{run_id}-{merge_batch}")
+        stats = []
+        for seq, tier in enumerate(TIERS):
             # the tier's derived compressed block store shares the day
             # layout; its blocks for a merged day now encode PRE-merge
             # values — drop them (mirrors retention's block handling)
-            for d in days:
-                bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
-                if bdir.exists():
-                    shutil.rmtree(bdir)
-                    stats.append(
-                        {
-                            "run_id": run_id,
-                            "batch_id": merge_batch,
-                            "tier": f"blocks_{tier}",
-                            "partition_key": f"block_date={d}",
-                            "rows_in": 0,
-                            "rows_out": 0,
-                            "min_ts": None,
-                            "max_ts": None,
-                            "committed_seq": -1,
-                        }
-                    )
+            stats += _drop_stale_blocks(store, tier, days, run_id, merge_batch)
             stats.append(
                 {
                     "run_id": run_id,
@@ -395,11 +397,10 @@ def merge_quarantine(
                     "tier": tier,
                     "partition_key": ",".join(sorted(days)),
                     "rows_in": n_late,
-                    "rows_out": -1,  # dynamic overwrite; day-scoped
+                    "rows_out": rows_out[tier],
                     "min_ts": b.lo,
                     "max_ts": b.hi,
-                    "committed_seq": merge_batch * 10
-                    + {"1m": 0, "1h": 1, "1d": 2}[tier],
+                    "committed_seq": merge_batch * 10 + seq,
                 }
             )
         store.append_checkpoint(spark, stats)

@@ -12,8 +12,10 @@ import pandas as pd
 import pytest
 
 from smos_spark.operators.rollup import (
+    merge_partials,
     reaggregate,
     rollup_from_raw,
+    row_partials,
     salted_rollup_from_raw,
     with_derived,
 )
@@ -79,6 +81,24 @@ def test_tier_cascade_exact(transcripts, pair):
     pd.testing.assert_frame_equal(from_fine, from_raw, check_dtype=True)
 
 
+def test_merged_row_partials_equal_rollup(spark, transcripts):
+    """One-row partials merged == the rollup, turns with NULL role,
+    text and tool included — the incremental ingest's exactness."""
+    import datetime as dt
+
+    odd = spark.createDataFrame(
+        [
+            ("convN", 0, None, None, None, dt.datetime(2025, 1, 1, 0, 0, 1)),
+            ("convN", 1, "user", "", "t", dt.datetime(2025, 1, 1, 0, 0, 2)),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    df = transcripts.unionByName(odd)
+    merged = spark_tier_pdf(merge_partials(row_partials(df, "1h")))
+    plain = spark_tier_pdf(rollup_from_raw(df, "1h"))
+    pd.testing.assert_frame_equal(merged, plain, check_dtype=True)
+
+
 def test_salted_rollup_identical(transcripts):
     plain = spark_tier_pdf(rollup_from_raw(transcripts, "1h"))
     salted = spark_tier_pdf(salted_rollup_from_raw(transcripts, "1h", n_salts=8))
@@ -117,12 +137,9 @@ def test_block_store_point_read(spark, transcripts, tmp_path):
     conv = "conv000003"
     # sort by (ts, value) on both sides: synth plants duplicate-ts
     # rows, so a ts-only order is ambiguous for value comparison
-    got = (
-        read_block_series(spark, path, conv, ["tl"])
-        .toPandas()
-        .sort_values(["ts", "tl"], kind="mergesort")
-        .reset_index(drop=True)
-    )
+    raw = read_block_series(spark, path, conv, ["tl"]).toPandas()
+    assert raw["ts"].is_monotonic_increasing  # returned in time order
+    got = raw.sort_values(["ts", "tl"], kind="mergesort").reset_index(drop=True)
     exp = (
         ser.where(F.col("conv_id") == conv)
         .toPandas()

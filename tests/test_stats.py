@@ -502,6 +502,20 @@ def test_standardize_constant_group_null_and_passthrough(spark):
     assert set(out.columns) == {"g", "i", "v", "extra", "z_ppm"}
 
 
+def test_standardize_null_group_is_scored(spark):
+    """A NULL group key is a group like any other: its rows are scored
+    against the NULL group's own moments, not passed through NULL."""
+    from smos_spark.operators.stats import standardize
+
+    df = spark.createDataFrame(
+        [(None, 1, 1), (None, 2, 3), ("a", 3, 5), ("a", 4, 9)],
+        "g string, i long, v long",
+    )
+    out = {r["i"]: r["z_ppm"] for r in standardize(df, "v", ["g"]).collect()}
+    # two-row groups: z = -1 and +1 exactly
+    assert out == {1: -1_000_000, 2: 1_000_000, 3: -1_000_000, 4: 1_000_000}
+
+
 def test_standardize_zero_row_shuffle_plan(spark):
     from smos_spark.operators.stats import standardize
 
